@@ -811,8 +811,6 @@ object GeoParquet {
       // provably a no-op, so skip its O(files) footer job and the
       // second inference listing outright.
       if (!schemaChainIntact(spark, path)) {
-        if (sys.env.contains("GRAFT_SWEEP_TRACE"))
-          new Exception(s"[sweep] $path").printStackTrace()
         val flatUnion = spark.read
           .option("recursiveFileLookup", "true").option("mergeSchema", "true")
           .parquet(path).schema

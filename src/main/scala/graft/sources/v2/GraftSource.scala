@@ -52,11 +52,8 @@ import graft.sources.GeoParquet
   * locked commit protocol), no file splitting (a writer-sized file is
   * the parallelism unit), pending merge-on-read deletes REFUSE
   * loudly (the subtraction is an anti-join this minimal face cannot
-  * express — compact first), and row values decode through the
-  * stable parquet-mr record API rather than Spark's internal
-  * vectorized reader: the SQL face trades per-row decode speed for
-  * zero dependence on Spark internals, and the hot analytical paths
-  * keep using the API readers.
+  * express — compact first).  Row values decode through Spark's
+  * vectorized parquet reader (VectorizedReaders.scala).
   */
 class GraftSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -560,7 +557,7 @@ final class GraftScanBuilder(path: String, dataSchema: StructType,
     // manifest for every file with ZERO doomed positions (the
     // tombstone parts NAME the doomed files, so innocence is provable
     // from metadata alone), while a doomed file boundary-scans with
-    // its positions skipped ([[GroupAggReader]]) — a doomed row might
+    // its positions skipped ([[VecAggReader]]) — a doomed row might
     // BE the extremum, so stats cannot answer for THAT file, but one
     // row's DELETE must not re-open the other 99.999% of a 100 TB
     // corpus.  Snapshots slice the subtraction by part epoch exactly
@@ -591,11 +588,6 @@ final class GraftScanBuilder(path: String, dataSchema: StructType,
   */
 private[graft] object ExactFilters {
   import org.apache.spark.sql.sources._
-
-  /** Present-but-not-numeric marker returned by record lookups for
-    * columns only ever tested for null-ness.
-    */
-  private[v2] object NonNullValue
 
   private def numericType(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | FloatType | DoubleType => true
@@ -1747,32 +1739,26 @@ final class GraftReaderFactory(conf: SerConf, dataJson: String,
     val gp = p.asInstanceOf[GraftPartition]
     val dataSchema = DataType.fromJson(dataJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    // columnar decode first (Spark's vectorized parquet reader — see
-    // VectorizedReaders.scala); null = outside its surface, fall back
-    // to the parquet-mr Group readers below (same rows either way)
-    val vec = VecReaders.tryCreate(gp, conf, dataSchema, required, exact,
-      bounds, rowIdMode, deleteParts)
-    if (vec != null) return vec
-    if (rowIdMode || gp.hasDeletes) {
-      // only the tombstone parts whose file interval can contain THIS
-      // file — tombstoneShaped's range partitioning makes that ~one
-      // part per pending mutation, not every part
-      val parts =
-        if (gp.hasDeletes)
-          deleteParts.collect {
-            case (f, lo, hi) if lo <= gp.relFile && gp.relFile <= hi => f
-          }
-        else Seq.empty
-      new GroupRowIdReader(gp.relFile, gp.file, conf, dataSchema, required,
-        exact, parts)
-    } else
-      new GroupRowReader(gp.file, conf, dataSchema, required, exact, bounds)
+    val dataFields = VecReaders.readFieldsFor(dataSchema, required, exact)
+      .filterNot(f => GraftSource.MetaCols.contains(f.name))
+    // positions are physical row indexes: no predicate may skip a row
+    // group, so none is pushed
+    val posMode = rowIdMode || gp.hasDeletes
+    new VecRowReader(gp, conf, StructType(dataFields), required, exact,
+      if (posMode) Seq.empty else bounds, posMode, deleteParts)
   }
 }
 
 /** Java-serializable Hadoop `Configuration` carrier (it is `Writable`,
   * not `Serializable`) — the broadcast-conf idiom, local to the v2
   * package.
+  *
+  * Task-side users call `conf.size()` once before copying or reading
+  * the conf: a `new Configuration(conf)` whose source Properties are
+  * still unmaterialized re-parses the Hadoop XML resources per copy
+  * (~10 ms, the dominant CPU of a many-small-file scan in stack
+  * sampling), so one materialization per task keeps every later copy
+  * a cheap Properties clone.
   */
 final class SerConf(@transient private var c: org.apache.hadoop.conf.Configuration)
     extends Serializable {
@@ -1826,271 +1812,6 @@ final class SerConf(@transient private var c: org.apache.hadoop.conf.Configurati
   }
 }
 
-/** One pruned data file decoded through parquet-mr's public record
-  * API (`GroupReadSupport`): column projection via the requested-
-  * schema conf key (widened to the pushed filters' columns — they
-  * may not be projected), row-group + record skipping via a per-file
-  * `FilterPredicate` built against the footer's ACTUAL primitive
-  * types, EXACT row filtering via [[ExactFilters.eval]], and
-  * schema-evolution fields the file predates read as null.
-  */
-private[v2] abstract class GroupFileReader(file: String, ser: SerConf,
-    dataSchema: StructType, readFields: Array[StructField],
-    exact: Seq[Filter], bounds: Seq[(String, Double, Double)]) {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.filter2.compat.FilterCompat
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-  import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  // the task-local deserialized conf is used READ-ONLY here (the
-  // projection rides a PlainParquetConfiguration below, not a conf
-  // mutation), so no per-file Configuration copy: a copy whose source
-  // Properties were unmaterialized re-parsed the Hadoop XML resources
-  // per reader (~10 ms, the dominant CPU of a many-small-file scan in
-  // stack sampling).  size() forces one materialization per task.
-  private val conf = { ser.conf.size(); ser.conf }
-  private val hPath = new org.apache.hadoop.fs.Path(file)
-
-  protected val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-    try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-  }
-
-  // project to the read fields the file actually has; absent fields
-  // (schema evolution) null-fill at assembly
-  protected val present: Array[Option[Type]] = readFields.map { f =>
-    if (fileSchema.containsField(f.name))
-      Some(fileSchema.getType(fileSchema.getFieldIndex(f.name)))
-    else None
-  }
-  private val projection =
-    new MessageType(fileSchema.getName, present.flatten.toList.asJava)
-  private val fieldIdx: Map[String, Int] =
-    readFields.map(_.name).zipWithIndex.toMap
-
-  private def predicateFor: Option[FilterPredicate] = {
-    val ps = bounds.flatMap { case (c, lo, hi) =>
-      if (!fileSchema.containsField(c)) None
-      else fileSchema.getType(fileSchema.getFieldIndex(c)) match {
-        case p: PrimitiveType => p.getPrimitiveTypeName match {
-          case DOUBLE =>
-            val col = FilterApi.doubleColumn(c)
-            Some(FilterApi.and(
-              FilterApi.gtEq(col, java.lang.Double.valueOf(lo)),
-              FilterApi.ltEq(col, java.lang.Double.valueOf(hi))))
-          case INT64 =>
-            // floor/ceil keeps the record filter a SUPERSET of the
-            // exact bound; the exact evaluator trims the rest
-            val col = FilterApi.longColumn(c)
-            Some(FilterApi.and(
-              FilterApi.gtEq(col, java.lang.Long.valueOf(
-                if (lo.isNegInfinity) Long.MinValue else math.floor(lo).toLong)),
-              FilterApi.ltEq(col, java.lang.Long.valueOf(
-                if (hi.isPosInfinity) Long.MaxValue else math.ceil(hi).toLong))))
-          case INT32 =>
-            val col = FilterApi.intColumn(c)
-            Some(FilterApi.and(
-              FilterApi.gtEq(col, java.lang.Integer.valueOf(
-                if (lo.isNegInfinity) Int.MinValue
-                else math.max(Int.MinValue.toDouble, math.floor(lo)).toInt)),
-              FilterApi.ltEq(col, java.lang.Integer.valueOf(
-                if (hi.isPosInfinity) Int.MaxValue
-                else math.min(Int.MaxValue.toDouble, math.ceil(hi)).toInt))))
-          case FLOAT =>
-            val col = FilterApi.floatColumn(c)
-            Some(FilterApi.and(
-              FilterApi.gtEq(col, java.lang.Float.valueOf(lo.toFloat)),
-              FilterApi.ltEq(col, java.lang.Float.valueOf(hi.toFloat))))
-          case _ => None
-        }
-        case _ => None
-      }
-    }
-    ps.reduceOption(FilterApi.and)
-  }
-
-  private val reader: ParquetReader[Group] = {
-    // the legacy conf-first constructor, ON PURPOSE: every other
-    // entry point — builder(support, path), and even the
-    // ParquetConfiguration builder (whose GroupReadSupport.init
-    // converts back through ConfigurationUtil.createHadoopConfiguration)
-    // — constructs a FRESH `new Configuration()` per reader, which
-    // re-parses the Hadoop XML resources (~10 ms, the dominant CPU of
-    // a many-small-file scan in stack sampling).  This path reuses
-    // the task's materialized conf; the projection and the pushed
-    // FilterPredicate ride a cheap Properties-clone copy of it
-    // (HadoopReadOptions.builder(conf) picks the filter up via
-    // ParquetInputFormat.getFilter — the same row-group + record
-    // filtering withFilter(FilterCompat.get(p)) produced).
-    val rconf = new org.apache.hadoop.conf.Configuration(conf)
-    rconf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    predicateFor.foreach(p =>
-      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(rconf, p))
-    new ParquetReader(rconf, hPath, new GroupReadSupport()): ParquetReader[Group]
-  }
-
-  protected var current: Group = _
-
-  /** Physical index of `current` within the file, counting every
-    * record the reader surfaces.  Meaningful only when no parquet-
-    * level FilterPredicate skips records (`bounds` empty — the
-    * [[GroupRowIdReader]] contract); the bounded readers leave it
-    * unused.
-    */
-  protected var recordPos: Long = -1L
-
-  private val lookup: String => Any = name => valueAt(fieldIdx(name))
-
-  /** Advance to the next record that passes EVERY pushed filter
-    * (Some(true) under three-valued evaluation).
-    */
-  protected def advance(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
-      recordPos += 1
-      current = g
-      if (exact.forall(f => ExactFilters.eval(f, lookup).contains(true)))
-        return true
-      g = reader.read()
-    }
-    current = null
-    false
-  }
-
-  /** The current record's value for read-field `i`, as the column
-    * type's boxed Java value (numerics/booleans), UTF8String/bytes
-    * for strings/binary, null when absent or unset.  Non-numeric
-    * values surface only for projection and null tests — comparisons
-    * are restricted to numeric columns by [[ExactFilters.handles]].
-    */
-  protected def valueAt(i: Int): Any = {
-    val f = readFields(i)
-    present(i) match {
-      case None => null
-      case Some(_) if current.getFieldRepetitionCount(f.name) == 0 => null
-      case Some(_) =>
-        f.dataType match {
-          case LongType => fileLong(f.name)
-          case IntegerType => current.getInteger(f.name, 0)
-          case DoubleType => fileDouble(f.name)
-          case FloatType => current.getFloat(f.name, 0)
-          case BooleanType => current.getBoolean(f.name, 0)
-          case StringType =>
-            org.apache.spark.unsafe.types.UTF8String
-              .fromString(current.getString(f.name, 0))
-          case BinaryType => current.getBinary(f.name, 0).getBytes
-          case other => throw new UnsupportedOperationException(
-            s"graft SQL face: unsupported column type ${other.simpleString} " +
-              s"for ${f.name} — read this layout via the API")
-        }
-    }
-  }
-
-  // a file written before a type widened stores the narrower physical
-  private def fileLong(name: String): Any =
-    fileSchema.getType(fileSchema.getFieldIndex(name)).asPrimitiveType().getPrimitiveTypeName match {
-      case INT32 => current.getInteger(name, 0).toLong
-      case _ => current.getLong(name, 0)
-    }
-  private def fileDouble(name: String): Any =
-    fileSchema.getType(fileSchema.getFieldIndex(name)).asPrimitiveType().getPrimitiveTypeName match {
-      case FLOAT => current.getFloat(name, 0).toDouble
-      case _ => current.getDouble(name, 0)
-    }
-
-  def close(): Unit = reader.close()
-}
-
-private[v2] object GroupFileReader {
-  /** The fields a reader must decode: the projection plus any pushed-
-    * filter column not already in it (filters may reference pruned
-    * columns — the output row still carries only `required`).
-    */
-  def readFieldsFor(dataSchema: StructType, required: StructType,
-                    exact: Seq[Filter]): Array[StructField] = {
-    val extra = ExactFilters.referencedColumns(exact)
-      .filterNot(required.fieldNames.contains)
-      .flatMap(n => dataSchema.fields.find(_.name == n))
-    required.fields ++ extra
-  }
-}
-
-final class GroupRowReader(file: String, ser: SerConf,
-                           dataSchema: StructType, required: StructType,
-                           exact: Seq[Filter],
-                           bounds: Seq[(String, Double, Double)])
-    extends GroupFileReader(file, ser, dataSchema,
-      GroupFileReader.readFieldsFor(dataSchema, required, exact),
-      exact, bounds)
-    with PartitionReader[InternalRow] {
-
-  override def next(): Boolean = advance()
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      vals(i) = valueAt(i) // readFields start with `required`, in order
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-}
-
-/** [[GroupRowReader]] in row-address mode: emits the
-  * `_gfile`/`_gpos` metadata columns alongside the data columns, and
-  * SUBTRACTS this file's pending positional deletes when
-  * `deleteFiles` name tombstone parts (the SQL face's merge-on-read
-  * read: each reader point-looks-up its own doomed rows — file ==
-  * this file — from the kilobyte-scale sidecar parts, never a
-  * corpus-sized structure).  Positions are physical row indexes, so
-  * the parquet-level record filter is disabled (`bounds` = empty — a
-  * skipped record would shift every later position); the pushed
-  * exact filters still apply, AFTER each record's position is
-  * assigned.  File pruning (which shifts nothing) happened at
-  * planning as usual.
-  */
-final class GroupRowIdReader(relFile: String, file: String, ser: SerConf,
-                             dataSchema: StructType, required: StructType,
-                             exact: Seq[Filter],
-                             deleteFiles: Seq[String] = Seq.empty)
-    extends GroupFileReader(file, ser, dataSchema,
-      GroupFileReader.readFieldsFor(dataSchema, required, exact),
-      exact, Seq.empty)
-    with PartitionReader[InternalRow] {
-
-  private val rel = org.apache.spark.unsafe.types.UTF8String.fromString(relFile)
-
-  /** This file's doomed row positions, from the pending-delete parts. */
-  private val doomed: java.util.HashSet[java.lang.Long] =
-    DoomedPositions.load(relFile, deleteFiles, ser)
-
-  override def next(): Boolean = {
-    var ok = advance()
-    while (ok && !doomed.isEmpty && doomed.contains(recordPos)) ok = advance()
-    ok
-  }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      vals(i) = required.fields(i).name match {
-        case GraftSource.FileMetaCol => rel
-        case GraftSource.PosMetaCol => recordPos
-        case _ => valueAt(i) // readFields start with `required`, in order
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-}
-
 /** Task-side point lookup of ONE data file's doomed row positions
   * from the pending positional-delete parts — shared by the
   * merge-on-read row reader and the subtracting aggregate reader.
@@ -2108,16 +1829,20 @@ private[v2] object DoomedPositions {
     * map.  A task used to re-read the whole part (with a row-group
     * filter on `file`) once per data file it decodes — O(files ×
     * part); tombstoneShaped's range partitioning means a task's files
-    // cluster into ~one part, so one full decode per (task, part) is
+    * cluster into ~one part, so one full decode per (task, part) is
     * strictly less IO.  Memoized on the task-local [[SerConf]], same
     * lifetime discipline as [[SerConf.memoJobConf]].
     */
   private def readPart(df: String, ser: SerConf)
       : java.util.HashMap[String, java.util.HashSet[java.lang.Long]] = {
     val out = new java.util.HashMap[String, java.util.HashSet[java.lang.Long]]()
-    ser.conf.size() // materialize once (see GroupFileReader's note)
-    // legacy conf-first constructor for the same reason as
-    // GroupFileReader's reader: no fresh per-reader Configuration.
+    ser.conf.size() // materialize once (see SerConf)
+    // the legacy conf-first constructor, ON PURPOSE: every other entry
+    // point (builder(support, path), and the ParquetConfiguration
+    // builder, whose GroupReadSupport.init converts back through
+    // ConfigurationUtil.createHadoopConfiguration) builds a fresh
+    // `new Configuration()` per reader and re-parses the Hadoop XML
+    // resources.  This one reuses the task's materialized conf.
     // (An r17 attempt to switch to ParquetReader.builder +
     // withConf(task conf) + withFilter REGRESSED and kept getting
     // slower with JVM age — measured 9.4 s → 22 s over 8 bench
@@ -2496,23 +2221,17 @@ final class GraftAggReaderFactory(conf: SerConf, dataJson: String,
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case GraftAggMetaPartition(vals) => new SingleRowReader(vals)
-      case gp @ GraftPartition(f, rel, hasDeletes, _) =>
+      case gp: GraftPartition =>
         val dataSchema = DataType.fromJson(dataJson).asInstanceOf[StructType]
-        // columnar fold first (see VectorizedReaders.scala); null =
-        // outside its surface, fall back to the Group fold below
-        val vec = VecReaders.tryCreateAgg(gp, conf, dataSchema, aggCols,
-          exact, bounds, deleteParts)
-        if (vec != null) return vec
-        // same interval pruning as the row path: only the tombstone
-        // part(s) that can contain THIS file reach the reader
-        val parts =
-          if (hasDeletes)
-            deleteParts.collect {
-              case (pf, lo, hi) if lo <= rel && rel <= hi => pf
-            }
-          else Seq.empty
-        new GroupAggReader(f, conf, dataSchema,
-          aggCols, exact, bounds, rel, parts)
+        val valueStruct = StructType(VecReaders.valueCols(aggCols)
+          .flatMap(n => dataSchema.fields.find(_.name == n)))
+        val batchSchema = StructType(
+          VecReaders.readFieldsFor(dataSchema, valueStruct, exact))
+        // a doomed file folds by physical position, so no predicate
+        // may skip a row group there; clean files keep the bounds
+        new VecAggReader(new VecRowReader(gp, conf, batchSchema, valueStruct,
+          exact, if (gp.hasDeletes) Seq.empty else bounds, gp.hasDeletes,
+          deleteParts), batchSchema, aggCols)
     }
 }
 
@@ -2523,124 +2242,4 @@ final class SingleRowReader(vals: Array[Any])
   override def get(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
   override def close(): Unit = ()
-}
-
-private[v2] object GroupAggReader {
-  /** The data columns whose VALUES the fold needs (count(*) needs
-    * none), first in the reader's field order.
-    */
-  def valueCols(aggCols: Seq[AggCol]): Seq[String] = aggCols.collect {
-    case NNonNull(c) => c
-    case MinC(c) => c
-    case MaxC(c) => c
-    case SumC(c) => c
-  }.distinct
-
-  def readFieldsFor(dataSchema: StructType, aggCols: Seq[AggCol],
-                    exact: Seq[Filter]): Array[StructField] =
-    GroupFileReader.readFieldsFor(dataSchema,
-      StructType(valueCols(aggCols)
-        .flatMap(n => dataSchema.fields.find(_.name == n))),
-      exact)
-}
-
-/** Scan one boundary file, fold the exact-filtered rows into ONE
-  * partial-aggregate row.  Merge order for MIN/MAX uses the same
-  * nan-safe comparison as Spark's aggregates and the manifest stats.
-  * With pending deletes (`deleteFiles` non-empty) the fold SKIPS this
-  * file's doomed positions — which requires physical positions, so
-  * the parquet record filter is disabled for exactly those files
-  * (bounds = empty, as in [[GroupRowIdReader]]); clean files keep
-  * row-group skipping.
-  */
-final class GroupAggReader(file: String, ser: SerConf,
-                           dataSchema: StructType, aggCols: Seq[AggCol],
-                           exact: Seq[Filter],
-                           bounds: Seq[(String, Double, Double)],
-                           relFile: String = "",
-                           deleteFiles: Seq[String] = Seq.empty)
-    extends GroupFileReader(file, ser, dataSchema,
-      GroupAggReader.readFieldsFor(dataSchema, aggCols, exact),
-      exact, if (deleteFiles.isEmpty) bounds else Seq.empty)
-    with PartitionReader[InternalRow] {
-
-  private val valueIdx: Map[String, Int] =
-    GroupAggReader.valueCols(aggCols).zipWithIndex.toMap
-
-  private val doomed: java.util.HashSet[java.lang.Long] =
-    DoomedPositions.load(relFile, deleteFiles, ser)
-
-  private var done = false
-  private val acc: Array[Any] = aggCols.map {
-    case NRows | _: NNonNull => java.lang.Long.valueOf(0L): Any
-    case _ => null
-  }.toArray
-
-  override def next(): Boolean = {
-    if (done) return false
-    while (advance()) {
-      if (doomed.isEmpty || !doomed.contains(recordPos)) foldCurrent()
-    }
-    done = true
-    true
-  }
-
-  private def foldCurrent(): Unit = {
-    {
-      var i = 0
-      while (i < aggCols.length) {
-        aggCols(i) match {
-          case NRows =>
-            acc(i) = java.lang.Long.valueOf(acc(i).asInstanceOf[java.lang.Long] + 1L)
-          case NNonNull(c) =>
-            if (valueAt(valueIdx(c)) != null)
-              acc(i) = java.lang.Long.valueOf(acc(i).asInstanceOf[java.lang.Long] + 1L)
-          case MinC(c) =>
-            val v = valueAt(valueIdx(c))
-            if (v != null && (acc(i) == null || ExactFilters.compare(v, acc(i)) < 0))
-              acc(i) = v
-          case MaxC(c) =>
-            val v = valueAt(valueIdx(c))
-            if (v != null && (acc(i) == null || ExactFilters.compare(v, acc(i)) > 0))
-              acc(i) = v
-          case SumC(c) =>
-            val v = valueAt(valueIdx(c))
-            if (v != null) {
-              // widen to Spark's sum type (int/long -> long,
-              // float/double -> double) before accumulating
-              acc(i) = acc(i) match {
-                case null => v match {
-                  case x: java.lang.Integer =>
-                    java.lang.Long.valueOf(x.longValue())
-                  case x: java.lang.Long => x
-                  case x: java.lang.Float =>
-                    java.lang.Double.valueOf(x.doubleValue())
-                  case x: java.lang.Double => x
-                  case other => throw new IllegalStateException(
-                    s"non-numeric SUM input: $other")
-                }
-                case a: java.lang.Long =>
-                  java.lang.Long.valueOf(a.longValue() + (v match {
-                    case x: java.lang.Integer => x.longValue()
-                    case x: java.lang.Long => x.longValue()
-                    case other => throw new IllegalStateException(
-                      s"sum type drift: $other")
-                  }))
-                case a: java.lang.Double =>
-                  java.lang.Double.valueOf(a.doubleValue() + (v match {
-                    case x: java.lang.Float => x.doubleValue()
-                    case x: java.lang.Double => x.doubleValue()
-                    case other => throw new IllegalStateException(
-                      s"sum type drift: $other")
-                  }))
-              }
-            }
-        }
-        i += 1
-      }
-    }
-  }
-
-  override def get(): InternalRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(acc)
 }

@@ -401,111 +401,14 @@ private[v2] final class GraftChangeReaderFactory(
     val cp = p.asInstanceOf[GraftChangePartition]
     val dataSchema = DataType.fromJson(dataJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    conf.conf.size()
-    val vecOk = !sys.env.contains("GRAFT_VEC_DISABLE") &&
-      conf.conf.get("spark.graft.vectorizedReader", "true") != "false"
-    if (cp.isDelete) {
-      // columnar first (VecChange.scala); null = outside the
-      // vectorized surface, fall back to the Group twin
-      val vec = if (vecOk) VecChange.tryCreateDelete(cp.relFile, cp.file,
-        conf, dataSchema, required, exact, cp.deleteParts) else null
-      if (vec != null) vec
-      else new GroupChangeDeleteReader(cp.relFile, cp.file, conf,
-        dataSchema, required, exact, cp.deleteParts)
-    } else {
-      val vec = if (vecOk) VecChange.tryCreateInsert(cp.file, conf,
-        dataSchema, required, exact, bounds, cp.epoch) else null
-      if (vec != null) vec
-      else new GroupChangeInsertReader(cp.file, conf, dataSchema,
-        required, exact, bounds, cp.epoch)
-    }
-  }
-}
-
-/** Insert arm of the changelog read: a plain bounded file read whose
-  * output rows additionally carry ("insert", commit epoch).  Parquet
-  * record skipping stays ON — inserts need no positions.
-  */
-private[v2] final class GroupChangeInsertReader(
-    file: String, ser: SerConf, dataSchema: StructType,
-    required: StructType, exact: Seq[Filter],
-    bounds: Seq[(String, Double, Double)], epoch: Long)
-    extends GroupFileReader(file, ser, dataSchema,
-      GroupFileReader.readFieldsFor(dataSchema, required, exact),
-      exact, bounds)
-    with org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] {
-
-  private val verb =
-    org.apache.spark.unsafe.types.UTF8String.fromString("insert")
-
-  override def next(): Boolean = advance()
-
-  override def get(): org.apache.spark.sql.catalyst.InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      vals(i) = required.fields(i).name match {
-        case GraftSource.ChangeTypeCol => verb
-        case GraftSource.ChangeEpochCol => epoch
-        case _ => valueAt(i)
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-}
-
-/** Delete arm of the changelog read: re-opens a doomed data file and
-  * emits ONLY the positions named by this batch's tombstone parts,
-  * tagged ("delete", the tombstone's commit epoch).  Positions are
-  * physical row indexes, so the parquet record filter is disabled
-  * (bounds empty — the [[GroupRowIdReader]] contract); pushed exact
-  * filters still apply, AFTER each record's position is assigned.
-  */
-private[v2] final class GroupChangeDeleteReader(
-    relFile: String, file: String, ser: SerConf, dataSchema: StructType,
-    required: StructType, exact: Seq[Filter],
-    deleteParts: Seq[(String, Long)])
-    extends GroupFileReader(file, ser, dataSchema,
-      GroupFileReader.readFieldsFor(dataSchema, required, exact),
-      exact, Seq.empty)
-    with org.apache.spark.sql.connector.read.PartitionReader[
-      org.apache.spark.sql.catalyst.InternalRow] {
-
-  private val verb =
-    org.apache.spark.unsafe.types.UTF8String.fromString("delete")
-
-  /** pos → delete epoch for THIS file, from the kilobyte-scale parts
-    * (ascending epoch order: were a position ever doomed twice, the
-    * later commit would win).
-    */
-  private val doomed: java.util.HashMap[java.lang.Long, java.lang.Long] = {
-    val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-    deleteParts.foreach { case (pf, ep) =>
-      DoomedPositions.load(relFile, Seq(pf), ser)
-        .forEach(pos => m.put(pos, ep))
-    }
-    m
-  }
-
-  override def next(): Boolean = {
-    var ok = advance()
-    while (ok && !doomed.containsKey(recordPos)) ok = advance()
-    ok
-  }
-
-  override def get(): org.apache.spark.sql.catalyst.InternalRow = {
-    val vals = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      vals(i) = required.fields(i).name match {
-        case GraftSource.ChangeTypeCol => verb
-        case GraftSource.ChangeEpochCol => doomed.get(recordPos).longValue()
-        case _ => valueAt(i)
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+    val batchSchema = StructType(
+      VecReaders.readFieldsFor(dataSchema, required, exact)
+        .filterNot(f => GraftSource.ChangeCols.contains(f.name)))
+    if (cp.isDelete)
+      new VecChangeDeleteReader(cp.relFile, cp.file, conf, batchSchema,
+        required, exact, cp.deleteParts)
+    else
+      new VecChangeInsertReader(cp.file, conf, batchSchema, required,
+        exact, bounds, cp.epoch)
   }
 }

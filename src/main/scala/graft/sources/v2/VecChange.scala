@@ -6,85 +6,23 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar decode for the CDC changelog read (the vectorized twins
-  * of [[GroupChangeInsertReader]]/[[GroupChangeDeleteReader]]): the
-  * insert arm is a bounded file read whose rows additionally carry
-  * ("insert", commit epoch); the delete arm re-opens a doomed file
-  * and emits ONLY the positions its batch's tombstone parts name,
-  * tagged ("delete", that tombstone's commit epoch).  Semantics are
-  * unchanged — positions physical (no predicate on the delete arm),
-  * pushed exact filters apply to both arms (a filtered CDC stream
-  * retracts only what it would have delivered).
+/** Columnar decode for the CDC changelog read: the insert arm is a
+  * bounded file read whose rows additionally carry ("insert", commit
+  * epoch); the delete arm re-opens a doomed file and emits ONLY the
+  * positions its batch's tombstone parts name, tagged ("delete",
+  * that tombstone's commit epoch).  Positions are physical (no
+  * predicate on the delete arm); pushed exact filters apply to both
+  * arms (a filtered CDC stream retracts only what it would have
+  * delivered).  `batchSchema` is the parquet-side projection: the
+  * read fields minus the synthesized change columns.
   */
-private[v2] object VecChange {
-
-  /** Per-row exact-filter gate: compiled ordinal-bound predicate
-    * when the tree is inside the compiled surface, interpreted
-    * [[ExactFilters.eval]] otherwise.
-    */
-  final class ExactGate(exact: Seq[Filter], schema: StructType) {
-    private val idx: Map[String, (Int, DataType)] =
-      schema.fields.zipWithIndex.map { case (f, i) =>
-        f.name -> (i, f.dataType)
-      }.toMap
-    private val compiled: InternalRow => Boolean =
-      if (exact.isEmpty) null
-      else VecReaders.compilePredicate(exact, schema).orNull
-    def pass(row: InternalRow): Boolean =
-      exact.isEmpty || {
-        if (compiled != null) compiled(row)
-        else {
-          val lookup: String => Any = { name =>
-            val (i, dt) = idx(name)
-            if (row.isNullAt(i)) null else row.get(i, dt)
-          }
-          exact.forall(f => ExactFilters.eval(f, lookup).contains(true))
-        }
-      }
-  }
-
-  def tryCreateInsert(file: String, ser: SerConf, dataSchema: StructType,
-                      required: StructType, exact: Seq[Filter],
-                      bounds: Seq[(String, Double, Double)], epoch: Long)
-      : PartitionReader[InternalRow] = {
-    val batchSchema = VecReaders.changeBatchSchema(dataSchema, required,
-      exact).getOrElse(return null)
-    try {
-      val r = new VecChangeInsertReader(file, ser, batchSchema, required,
-        exact, bounds, epoch)
-      VecReaders.created.incrementAndGet()
-      r
-    } catch { case e: Exception =>
-      if (sys.env.contains("GRAFT_VEC_DEBUG")) e.printStackTrace()
-      VecReaders.fellBack.incrementAndGet(); null
-    }
-  }
-
-  def tryCreateDelete(relFile: String, file: String, ser: SerConf,
-                      dataSchema: StructType, required: StructType,
-                      exact: Seq[Filter], deleteParts: Seq[(String, Long)])
-      : PartitionReader[InternalRow] = {
-    val batchSchema = VecReaders.changeBatchSchema(dataSchema, required,
-      exact).getOrElse(return null)
-    try {
-      val r = new VecChangeDeleteReader(relFile, file, ser, batchSchema,
-        required, exact, deleteParts)
-      VecReaders.created.incrementAndGet()
-      r
-    } catch { case e: Exception =>
-      if (sys.env.contains("GRAFT_VEC_DEBUG")) e.printStackTrace()
-      VecReaders.fellBack.incrementAndGet(); null
-    }
-  }
-}
-
 private[v2] final class VecChangeInsertReader(file: String, ser: SerConf,
     batchSchema: StructType, required: StructType, exact: Seq[Filter],
     bounds: Seq[(String, Double, Double)], epoch: Long)
     extends PartitionReader[InternalRow] {
   private val reader =
     VecReaders.openVectorized(file, ser, batchSchema, bounds)
-  private val gate = new VecChange.ExactGate(exact, batchSchema)
+  private val gate = new VecReaders.ExactGate(exact, batchSchema)
   private val view = new SpliceView(required, batchSchema,
     GraftSource.ChangeTypeCol, UTF8String.fromString("insert"),
     GraftSource.ChangeEpochCol)
@@ -110,7 +48,7 @@ private[v2] final class VecChangeDeleteReader(relFile: String,
   // group, so none is pushed (bounds empty)
   private val reader =
     VecReaders.openVectorized(file, ser, batchSchema, Seq.empty)
-  private val gate = new VecChange.ExactGate(exact, batchSchema)
+  private val gate = new VecReaders.ExactGate(exact, batchSchema)
   private val view = new SpliceView(required, batchSchema,
     GraftSource.ChangeTypeCol, UTF8String.fromString("delete"),
     GraftSource.ChangeEpochCol)

@@ -36,7 +36,7 @@ private[v2] object VecWrite {
     */
   def open(file: String, ser: SerConf, schema: StructType)
       : ParquetWriter[InternalRow] = {
-    ser.conf.size() // materialize once (see GroupFileReader's note)
+    ser.conf.size() // materialize once (see SerConf)
     val conf = new org.apache.hadoop.conf.Configuration(ser.conf)
     ParquetWriteSupport.setSchema(schema, conf)
     conf.setBoolean("spark.sql.parquet.writeLegacyFormat", false)

